@@ -58,10 +58,7 @@ def get_spark(master: str | None = None, app_name: str = "qse-spark",
         # regex setup, output assembly) — 64k rows ≈ 7 MB, safely small
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode: every executor thread shares the driver JVM — size the
-        # heap for the thread count or wide shuffles GC-thrash (128 GiB box)
-        .config("spark.driver.memory",
-                os.environ.get("QSE_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -87,6 +84,24 @@ def get_spark(master: str | None = None, app_name: str = "qse-spark",
         # `spark-submit --py-files qse_spark.zip` would
         spark.sparkContext.addPyFile(_package_zip())
     return spark
+
+
+def driver_memory() -> str:
+    """Driver heap for `spark.driver.memory`: `QSE_SPARK_DRIVER_MEM` if set,
+    else min(48g, 3/8 of physical RAM).
+
+    In local mode every executor thread shares the driver JVM, so the heap
+    is sized for the thread count or wide shuffles GC-thrash; 48g was chosen
+    on a 128 GiB host, i.e. 3/8 of RAM. A fixed 48g on a smaller host lets
+    G1 grow the heap past what the machine has and the kernel OOM-kills the
+    driver, so the same ratio is applied to the host's own memory.
+    """
+    env = os.environ.get("QSE_SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+               // (1024 * 1024))
+    return f"{min(48 * 1024, phys_mb * 3 // 8)}m"
 
 
 def _package_zip() -> str:

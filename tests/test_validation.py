@@ -3,6 +3,9 @@ QseSHACLValidator.java:70-134 for the constraint kinds QSE emits."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from qse_spark.validation import sh_not_report, validation_report
@@ -172,6 +175,8 @@ def test_sh_not_report_sampled_matches_emitted_wrappers(spark):
     assert any("absonly" in s for s in ab)  # the discriminator
 
 
+@pytest.mark.skipif(not os.path.isdir("/root/reference/validation/example"),
+                    reason="reference validation/example/ not present")
 def test_cross_engine_shacl_mini_validator(spark, tmp_path):
     """Cross-engine V2 check (round-4 verdict missing #2): the relational
     validation_report vs qse_spark.shaclcheck — an independent pure-Python
