@@ -3,24 +3,29 @@
    "queries": {<name>: sec, ...}, "sf": ...,
    "throughput": {...}, "cpus": N}
 
-Headline: the full KG-construction pipeline (extraction -> LSH linking ->
-CC -> canonicalize -> QSE stats) on the deterministic transcript fixture
-sized for $SPARK_GRAFT_SF_DIR, no stage checkpoints (pure compute), plus
-representative operator queries on the driver-provided tables.
+Headline: `run_pipeline` itself (extraction -> LSH linking -> CC ->
+canonicalize -> QSE stats) with a fresh checkpoint workdir per pass, on the
+deterministic transcript fixture sized for $SPARK_GRAFT_SF_DIR, plus
+representative operator queries on the driver-provided tables. Per-stage
+seconds are the stage manifests' wall_sec, keyed by stage name
+(pipeline.STAGES).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), QSE_BENCH_TURNS (override fixture size),
      QSE_BENCH_REPLICATE (default 1) — replicate the fixture R x with
      distinct conv_ids into a multi-file parquet dir, so scaling runs are
      compute-bound rather than startup-bound (vocabulary stays fixed, the
-     corpus grows — the realistic shape at 10^12 turns).
+     corpus grows — the realistic shape at 10^12 turns),
+     QSE_BENCH_APPROX (PipelineConfig(approx=True): QSE-Approximate stats).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -30,12 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from qse_spark.operators import dedup, similarity  # noqa: E402
 from qse_spark.operators import text as text_ops  # noqa: E402
 from qse_spark.oracles import TPCH_TRIPLES_SQL  # noqa: E402
-from qse_spark.pipeline import (PipelineConfig,  # noqa: E402
-                                canonicalize_triples)
-from qse_spark.operators.cc import canonical_map  # noqa: E402
-from qse_spark.operators.extraction import (  # noqa: E402
-    extract_triple_groups, mentions_from_triples)
-from qse_spark.operators.linking import linking_edges  # noqa: E402
+from qse_spark.pipeline import PipelineConfig, run_pipeline  # noqa: E402
 from qse_spark.session import get_spark  # noqa: E402
 from qse_spark.stats import shape_stats  # noqa: E402
 from qse_spark.testdata import ensure_fixture  # noqa: E402
@@ -62,23 +62,24 @@ def main():
     spark = get_spark(master=master, app_name="qse-bench")
     spark.sparkContext.setLogLevel("ERROR")
     q: dict[str, float] = {}
+    approx_mode = bool(os.environ.get("QSE_BENCH_APPROX"))
     # salt=0: the bench input is already written as 64 balanced files, so
     # the scan parallelizes without a pre-shuffle; conversation salting is
     # exercised by tests and stays available for skewed production inputs
-    cfg = PipelineConfig(salt=0)
-    cc_distributed = bool(os.environ.get("QSE_BENCH_CC_DISTRIBUTED"))
-    approx_mode = bool(os.environ.get("QSE_BENCH_APPROX"))
+    cfg = PipelineConfig(salt=0, approx=approx_mode)
 
+    # tmpfs-backed bench input and checkpoints: the sandbox's virtual disk
+    # has erratic co-tenant-driven latency that would otherwise dominate
+    # the measurement (a real cluster reads from distributed storage)
+    root = "/dev/shm/qse-bench-input" if os.path.isdir("/dev/shm") \
+        else os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          ".bench_work")
+    os.makedirs(root, exist_ok=True)
     in_path = os.path.join(fx, "transcripts.parquet")
     if replicate >= 1:
         # replicate == 1 still rewrites the input as a 64-file dir: the
         # generator emits ONE parquet file and a single-file scan caps the
         # extraction stage at one task per row group
-        # tmpfs-backed bench input: the sandbox's virtual disk has erratic
-        # co-tenant-driven latency that would otherwise dominate the
-        # measurement (a real cluster reads from distributed storage)
-        root = "/dev/shm/qse-bench-input" if os.path.isdir("/dev/shm") \
-            else "/root/repo/.bench_work"
         # fixture GENERATOR version is part of the cache key: the derived
         # replicated dir must invalidate when the world's content changes
         # (e.g. the round-4 uniform-mixture vocab worlds bumped v4 -> v5),
@@ -119,61 +120,28 @@ def main():
      .mapInPandas(lambda it: it, "id long")
      .groupBy((F.col("id") % 8).alias("k")).count().count())
 
-    # --- headline: end-to-end pipeline, stage-by-stage timing ---
-    # extract + group fuse into ONE pass over the corpus (map-side combine
-    # into the distinct-triple table); every later stage touches only the
-    # vocabulary-sized aggregate — the shape that holds at 10^12 turns.
+    # --- headline: run_pipeline end to end, stage-by-stage timing ---
     def pipeline_pass():
-        s = {}
+        wd = tempfile.mkdtemp(prefix="wd-", dir=root)
+        counters: list = []
         t0 = time.time()
-        transcripts = spark.read.parquet(in_path)
-        groups = extract_triple_groups(transcripts, salt=cfg.salt).persist()
-        groups.count()
-        s["p1_extract_group"] = time.time() - t0
-        n_triples = int(groups.agg(F.sum("cnt")).collect()[0][0])
-
-        t = time.time()
-        links = linking_edges(mentions_from_triples(groups), tau=cfg.tau,
-                              bands=cfg.bands, rows=cfg.rows_per_band,
-                              max_block=cfg.max_block,
-                              token_max_df=cfg.token_max_df).persist()
-        links.count()
-        s["p2_linking"] = time.time() - t
-
-        t = time.time()
-        # QSE_BENCH_CC_DISTRIBUTED=1 forces the large/small-star rounds
-        # even under the 500K-edge hybrid threshold, so the e2e scaling
-        # evidence can include real distributed CC (round-4 verdict #8)
-        cmap = canonical_map(
-            links,
-            driver_threshold=0 if cc_distributed else 500_000).persist()
-        n_mentions = cmap.count()
-        s["p3_cc"] = time.time() - t
-
-        t = time.time()
-        canon = canonicalize_triples(groups, cmap).persist()
-        n_canon = canon.count()
-        s["p4_canonicalize"] = time.time() - t
-
-        t = time.time()
-        # QSE_BENCH_APPROX=1 benches the QSE-Approximate entry point
-        # (A1-A6 sampling path) instead of exact stats (round-4 verdict #9)
-        if approx_mode:
-            from qse_spark.operators.sampling import approx_shape_stats
-            stats = approx_shape_stats(canon)
-        else:
-            stats = shape_stats(canon)
-        n_stats = stats.count()
-        s["p5_stats"] = time.time() - t
+        out = run_pipeline(spark, in_path, workdir=wd, config=cfg,
+                           counters=counters)
+        out["shape_stats"].collect()
         e2e = time.time() - t0
-        for df in (groups, links, cmap, canon):
-            df.unpersist()
-        return e2e, s, (n_triples, n_mentions, n_canon, n_stats)
+        n_triples = int(out["triple_groups"].agg(F.sum("cnt"))
+                        .collect()[0][0])
+        shutil.rmtree(wd)
+        rows = {c["stage"]: c["rows"] for c in counters}
+        return e2e, {c["stage"]: c["wall_sec"] for c in counters}, (
+            n_triples, rows["canonical_map"], rows["canonical_triples"],
+            rows["shape_stats"])
 
     # best-of-n whole-phase passes, same rationale as best_of below: the
     # sandbox intermittently freezes the VM for tens of seconds, and a
     # single timed pass that catches a freeze misreports every stage.
-    # Per-stage splits come from the winning pass so they sum to its e2e.
+    # Per-stage splits come from the winning pass; they sum to its e2e
+    # less the stage read-backs and the final stats collect.
     # The controlled 64M-turn scaling harness (scripts/bench_scaling.py)
     # sets QSE_BENCH_PIPE_RUNS=1: its passes are 100-650s, far above the
     # stall scale, and a second pass would double a ~20-min experiment.
@@ -195,15 +163,14 @@ def main():
             "protocol": "floor",
             "n_runs": {"pipeline": pipe_runs},
             "sf": sf_tag, "cpus": cpus, "replicate": replicate,
-            "vocab_mult": vocab_mult,
-            "cc_distributed": cc_distributed, "approx": approx_mode,
+            "vocab_mult": vocab_mult, "approx": approx_mode,
             "rows": {"turns": n_turns, "raw_triples": n_triples,
                      "mentions": n_mentions, "canonical_triples": n_canon,
                      "stats_rows": n_stats},
             "throughput": {
                 "turns_per_sec": round(n_turns / e2e, 1),
                 "triples_per_sec": round(n_triples / e2e, 1),
-                "extract_triples_per_sec": round(n_triples / q["p1_extract_group"], 1),
+                "extract_triples_per_sec": round(n_triples / q["triple_groups"], 1),
             },
         }
         spark.stop()
@@ -279,7 +246,7 @@ def main():
         "throughput": {
             "turns_per_sec": round(n_turns / e2e, 1),
             "triples_per_sec": round(n_triples / e2e, 1),
-            "extract_triples_per_sec": round(n_triples / q["p1_extract_group"], 1),
+            "extract_triples_per_sec": round(n_triples / q["triple_groups"], 1),
         },
     }
     spark.stop()

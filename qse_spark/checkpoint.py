@@ -2,8 +2,9 @@
 "resumable from checkpoint with per-partition lineage + metrics").
 
 Each stage writes its output table plus a `_manifest.json` recording the
-stage name, a config hash (covers every upstream parameter and input
-fingerprint), row count, per-partition row counts, and wall time. On
+stage name, a config hash (covers every upstream parameter, the input
+fingerprint and the qse_spark source fingerprint), row count,
+per-partition row counts, and wall time. On
 restart, a stage whose manifest matches its config hash is loaded from disk
 instead of recomputed — a mid-pipeline kill resumes where it left off and
 reproduces byte-identical results (tests/test_pipeline.py resume tests).
@@ -17,6 +18,7 @@ a path-addressed store, not an Iceberg table identifier.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -30,6 +32,24 @@ MANIFEST = "_manifest.json"
 def config_hash(obj) -> str:
     return hashlib.sha256(
         json.dumps(obj, sort_keys=True, default=str).encode()).hexdigest()[:16]
+
+
+@functools.cache
+def code_fingerprint() -> str:
+    """Hash of the qse_spark package's .py source bytes (and their
+    relative paths). It roots every stage's hash chain, so a run after
+    an edit to stage code recomputes instead of resuming stale parquet.
+    Cached: computed once per process, not on every pipeline run."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for root, dirs, files in os.walk(pkg):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for fn in sorted(f for f in files if f.endswith(".py")):
+            fp = os.path.join(root, fn)
+            h.update(os.path.relpath(fp, pkg).encode())
+            with open(fp, "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()[:16]
 
 
 def input_fingerprint(path: str) -> dict:
@@ -89,8 +109,10 @@ def _parquet_part_counts(path: str) -> dict[str, int] | None:
     stage per run). Keys are part-file names, i.e. the TRUE written
     partitions — the old read-back counted read-split partitions, which
     depend on maxPartitionBytes, not on what was written. Returns None
-    for non-local URIs (caller records only the total row count there;
-    remote lineage belongs to the table format's own metadata)."""
+    for non-local URIs, and when the walk finds no parquet file (a
+    scheme-less path written to a non-local default FS): the caller then
+    records only a counted total (remote lineage belongs to the table
+    format's own metadata)."""
     if "://" in path and not path.startswith("file:"):
         return None
     local = path[len("file:"):] if path.startswith("file:") else path
@@ -104,16 +126,18 @@ def _parquet_part_counts(path: str) -> dict[str, int] | None:
             fp = os.path.join(root, fn)
             counts[os.path.relpath(fp, local)] = int(
                 pq.ParquetFile(fp).metadata.num_rows)
-    return counts
+    return counts or None
 
 
-def write_stage(df: DataFrame, path: str, stage: str, conf_hash: str) -> dict:
+def write_stage(df: DataFrame, path: str, stage: str, conf_hash: str,
+                t0: float | None = None) -> dict:
     """Materialize a stage: parquet + manifest with per-partition counts
-    (from footers — the write is the ONLY job this function runs)."""
-    t0 = time.time()
+    (from footers — the write is the ONLY job this function runs).
+    `wall_sec` runs from `t0` (default: now)."""
+    t0 = time.time() if t0 is None else t0
     df.write.mode("overwrite").parquet(path)
     part_counts = _parquet_part_counts(path)
-    if part_counts is None:          # remote URI: one count, no lineage map
+    if part_counts is None:          # no footers found: count once
         rows = df.sparkSession.read.parquet(path).count()
         part_counts = {}
     else:
@@ -133,13 +157,16 @@ def write_stage(df: DataFrame, path: str, stage: str, conf_hash: str) -> dict:
 
 def stage(spark: SparkSession, path: str, name: str, conf_hash: str,
           compute, counters: list | None = None) -> DataFrame:
-    """Run-or-resume one stage. `compute` is a thunk returning the DataFrame."""
+    """Run-or-resume one stage. `compute` is a thunk returning the
+    DataFrame; the manifest's wall_sec includes the thunk, since stage
+    builders do eager work (pins, guard counts) before returning."""
     if is_satisfied(path, conf_hash):
         if counters is not None:
             with open(_manifest_path(path)) as f:
                 counters.append({**json.load(f), "resumed": True})
         return spark.read.parquet(path)
-    man = write_stage(compute(), path, name, conf_hash)
+    t0 = time.time()
+    man = write_stage(compute(), path, name, conf_hash, t0)
     if counters is not None:
         counters.append({**man, "resumed": False})
     return spark.read.parquet(path)

@@ -17,10 +17,6 @@ two hash shuffles over the edge set — AQE coalesces the final tiny rounds.
 
 from __future__ import annotations
 
-import os
-import sys
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -144,23 +140,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     # rounds costs milliseconds instead of a 2x-shuffle-partitions task storm
     npart = max(1, min(cur.sparkSession.sparkContext.defaultParallelism,
                        prev_fp[0] // 100_000 + 1))
-    timing = bool(os.environ.get("QSE_CC_TIMING"))
     prev_fp = None
-    for rnd in range(max_iter):
-        t0 = time.monotonic()
+    for _ in range(max_iter):
         prev = cur
         cur = pin(_small_star(_large_star(cur)).coalesce(npart))
         # the new round is materialized, so the superseded round's blocks
         # have no remaining consumer — release them NOW instead of letting
         # them pile up for the ContextCleaner (O(log n) pins per CC call)
         release_df(prev)
-        t1 = time.monotonic()
         fp = _fingerprint(cur)
-        if timing:
-            print(f'CC_ROUND {{"round": {rnd}, "edges": {fp[0]}, '
-                  f'"star_sec": {t1 - t0:.3f}, '
-                  f'"fp_sec": {time.monotonic() - t1:.3f}}}',
-                  file=sys.stderr)
         if fp == prev_fp:
             break
         prev_fp = fp

@@ -67,18 +67,29 @@ def pin_scope():
         _SCOPE.reset(token)
 
 
+def _unpersist(spark: SparkSession, ids) -> int:
+    """Unpersist whichever of `ids` are still persistent RDDs; returns how
+    many were. A JVM API drift returns 0 and leaves the blocks to the
+    ContextCleaner — the same fallback _rdd_id takes."""
+    try:
+        pm = spark.sparkContext._jsc.getPersistentRDDs()
+        n = 0
+        for rid in set(ids):
+            jrdd = pm.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
+                n += 1
+        return n
+    except Exception:
+        return 0
+
+
 def release(spark: SparkSession, ids: list[int]) -> int:
     """Unpersist the given pinned RDD ids (non-blocking); returns how many
     were still persistent. Safe to call with stale/duplicate ids."""
     if not ids:
         return 0
-    pm = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for rid in set(ids):
-        jrdd = pm.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-            n += 1
+    n = _unpersist(spark, ids)
     ids.clear()
     return n
 
@@ -88,9 +99,5 @@ def release_df(df: DataFrame) -> None:
     unusable afterwards (truncated lineage) — only for pins whose every
     consumer has already run."""
     rid = _rdd_id(df)
-    if rid is None:
-        return
-    pm = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    jrdd = pm.get(rid)
-    if jrdd is not None:
-        jrdd.unpersist(False)
+    if rid is not None:
+        _unpersist(df.sparkSession, [rid])

@@ -8,22 +8,25 @@
               ─ stage 5 ─> QSE shape statistics   (stats.py kernel)
               ─ stage 6 ─> pruned shapes          (shapes.py)
 
-Each stage is independently checkpointed + resumable (checkpoint.py). The
-canonical-ID dictionary is broadcast (it is |distinct mentions|-sized, far
-smaller than the triple table), matching the north rule's "broadcast hash
-joins serve the canonical-ID dictionary".
+Stages 1-5 are defined once, in STAGES; run_pipeline, kg_from_groups (and
+through it the streaming incremental path) and bench.py all walk that
+table. With a workdir each stage is independently checkpointed +
+resumable (checkpoint.py). The canonical-ID dictionary is broadcast (it
+is |distinct mentions|-sized, far smaller than the triple table),
+matching the north rule's "broadcast hash joins serve the canonical-ID
+dictionary".
 
-Stage 1 defaults to the FUSED extraction (extract_triple_groups): the first
+Stage 1 is the FUSED extraction (extract_triple_groups): the first
 checkpoint written is the vocabulary-sized distinct-triple table, never the
 occurrence-sized per-turn one — at 10^12 turns materializing ~2x10^12
 per-turn triple rows to parquet (and reading them back) would dwarf every
-other stage. Per-turn provenance stays available as a lazy, un-checkpointed
-DataFrame; set PipelineConfig(fuse_extract=False) to materialize it as its
-own resumable stage instead.
+other stage. Per-turn provenance stays available as the lazy,
+un-checkpointed `triples` DataFrame run_pipeline returns.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import asdict, dataclass
 
@@ -64,25 +67,16 @@ class PipelineConfig:
     approx_bully: bool = False
     # canonical-dictionary broadcast guard (None = always broadcast)
     max_broadcast_rows: int | None = 5_000_000
-    # True (default): stage 1 checkpoints the FUSED vocabulary-sized
-    # distinct-triple aggregate (extract_triple_groups); per-turn triples
-    # stay lazy/un-checkpointed. False: materialize the occurrence-sized
-    # per-turn triple table as its own resumable stage first (provenance
-    # at the cost of an O(corpus) checkpoint write+read).
-    fuse_extract: bool = True
 
 
 def group_triples(triples: DataFrame) -> DataFrame:
-    """Stage 2 — collapse raw triples to distinct
+    """Collapse raw per-turn triples to distinct
     (subject, predicate, object, obj_kind) + cnt multiplicity.
 
-    The ONE corpus-sized shuffle of the back half of the pipeline: pure
-    hash aggregation (map-side partial combine absorbs hot triples, e.g.
-    ubiquitous tool-status assertions), near-linear scaling. Linking and
-    canonicalization then operate on the vocabulary-sized aggregate
-    instead of re-scanning the occurrence-sized table — at 10^12 turns
-    that is the difference between joining 10^12 rows and joining the
-    distinct-triple table."""
+    Not a pipeline stage: stage 1 (extract_triple_groups) fuses this
+    aggregation into the extraction pass. Kept as the staged reference
+    that tests/test_extraction.py::test_fused_extract_groups_equals_staged
+    compares the fused path against."""
     return (triples.groupBy("subject", "predicate", "object", "obj_kind")
             .agg(F.count("*").alias("cnt")))
 
@@ -143,9 +137,17 @@ def canonicalize_triples(triples: DataFrame, cmap: DataFrame,
             .agg(F.sum("_w").alias("cnt")))
 
 
-def _stats_for(canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The ONE approx-vs-exact stats dispatch, shared by the batch and
-    streaming-incremental paths so the two cannot drift."""
+def _links(cfg: PipelineConfig, groups: DataFrame) -> DataFrame:
+    return linking_edges(
+        mentions_from_triples(groups), tau=cfg.tau, bands=cfg.bands,
+        rows=cfg.rows_per_band, max_block=cfg.max_block,
+        scorer=cfg.scorer, token_max_df=cfg.token_max_df)
+
+
+def _shape_stats(cfg: PipelineConfig, canon: DataFrame) -> DataFrame:
+    """The ONE approx-vs-exact stats dispatch. The canonical table's cnt
+    column feeds the kernel as a multiplicity weight — no re-expansion of
+    duplicate triples."""
     if cfg.approx:
         from .operators.sampling import approx_shape_stats
         return approx_shape_stats(
@@ -155,6 +157,43 @@ def _stats_for(canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return shape_stats(canon)
 
 
+# The stage graph, in run order: (name, input names, consumed
+# PipelineConfig fields, build(cfg, *inputs)). An input names an earlier
+# stage or "transcripts". Each stage's checkpoint hashes ONLY the fields
+# it consumes (plus the upstream hash chain): toggling a last-stage knob
+# like approx must not invalidate the corpus-sized extraction checkpoint.
+STAGES = (
+    ("triple_groups", ("transcripts",), ("salt",),
+     lambda cfg, transcripts: extract_triple_groups(transcripts,
+                                                    salt=cfg.salt)),
+    ("links", ("triple_groups",),
+     ("tau", "bands", "rows_per_band", "max_block", "token_max_df",
+      "scorer"), _links),
+    ("canonical_map", ("links",), (),
+     lambda cfg, links: canonical_map(links)),
+    ("canonical_triples", ("triple_groups", "canonical_map"),
+     ("max_broadcast_rows",),
+     lambda cfg, groups, cmap: canonicalize_triples(
+         groups, cmap, max_broadcast_rows=cfg.max_broadcast_rows)),
+    ("shape_stats", ("canonical_triples",),
+     ("approx", "approx_max_cap", "approx_target_pct", "approx_seed",
+      "approx_bully"), _shape_stats),
+)
+
+
+def _walk(cfg: PipelineConfig, tables: dict, run=None) -> dict:
+    """Build, in STAGES order, every stage not already in `tables`
+    (name -> DataFrame), adding it there. `run(name, fields, thunk)`
+    wraps each build (the checkpoint layer); without it the thunk is
+    just called."""
+    for name, inputs, fields, build in STAGES:
+        if name not in tables:
+            thunk = functools.partial(build, cfg,
+                                      *(tables[i] for i in inputs))
+            tables[name] = run(name, fields, thunk) if run else thunk()
+    return tables
+
+
 def kg_from_groups(groups: DataFrame,
                    config: PipelineConfig | None = None
                    ) -> dict[str, DataFrame]:
@@ -162,97 +201,55 @@ def kg_from_groups(groups: DataFrame,
     -> shape stats) from an ALREADY-AGGREGATED distinct-triple table —
     no checkpointing, no input path. Used by the streaming incremental
     path (streaming/incremental.py), whose compacted micro-batch deltas
-    are exactly such a table; run_pipeline keeps its own per-stage
-    checkpointed thunks because each stage must be independently
-    resumable there."""
-    cfg = config or PipelineConfig()
-    links = linking_edges(
-        mentions_from_triples(groups), tau=cfg.tau, bands=cfg.bands,
-        rows=cfg.rows_per_band, max_block=cfg.max_block,
-        scorer=cfg.scorer, token_max_df=cfg.token_max_df)
-    cmap = canonical_map(links)
-    canon = canonicalize_triples(groups, cmap,
-                                 max_broadcast_rows=cfg.max_broadcast_rows)
-    return {"links": links, "canonical_map": cmap,
-            "canonical_triples": canon, "shape_stats": _stats_for(canon, cfg)}
+    are exactly such a table."""
+    tables = _walk(config or PipelineConfig(), {"triple_groups": groups})
+    del tables["triple_groups"]
+    return tables
 
 
 def run_pipeline(spark: SparkSession, transcripts_path: str,
                  workdir: str | None = None,
                  config: PipelineConfig | None = None,
                  counters: list | None = None) -> dict[str, DataFrame]:
-    """Full run; returns the stage DataFrames. With a workdir, every stage
-    checkpoints and a rerun resumes from the last complete stage."""
+    """Full run; returns the stage DataFrames plus the lazy per-turn
+    `triples`. With a workdir, every stage checkpoints and a rerun
+    resumes from the last complete stage."""
     cfg = config or PipelineConfig()
-    c = asdict(cfg)
     transcripts = spark.read.parquet(transcripts_path)
-    # content fingerprint, not just the path string: input REGENERATED at
-    # the same path must invalidate stale checkpoints (round-3 review)
-    input_fp = ckpt.input_fingerprint(transcripts_path)
-
-    # each stage hashes ONLY the config fields it consumes (plus the
-    # upstream hash chain): toggling a last-stage knob like approx must
-    # not invalidate the corpus-sized extraction checkpoint
-    def _stage(name, upstream_hash, fields, thunk):
-        if workdir is None:
-            return thunk(), upstream_hash
-        h = ckpt.config_hash([name, upstream_hash,
-                              {k: c[k] for k in fields},
-                              transcripts_path, input_fp])
-        return ckpt.stage(spark, os.path.join(workdir, name), name, h, thunk,
-                          counters), h
-
-    def _run():
-        if cfg.fuse_extract:
-            # per-turn provenance handle: lazy by design (consuming it
-            # re-runs the Arrow extraction UDF) — the fused stage exists
-            # precisely so no occurrence-sized table is ever checkpointed
-            triples = extract_triples(transcripts, salt=cfg.salt)
-            groups, h2 = _stage(
-                "triple_groups", "root", ["salt"],
-                lambda: extract_triple_groups(transcripts, salt=cfg.salt))
-        else:
-            triples, h1 = _stage(
-                "triples", "root", ["salt"],
-                lambda: extract_triples(transcripts, salt=cfg.salt))
-            groups, h2 = _stage("triple_groups", h1, [],
-                                lambda: group_triples(triples))
-        links, h3 = _stage(
-            "links", h2, ["tau", "bands", "rows_per_band", "max_block",
-                          "token_max_df", "scorer"],
-            lambda: linking_edges(
-                mentions_from_triples(groups), tau=cfg.tau, bands=cfg.bands,
-                rows=cfg.rows_per_band, max_block=cfg.max_block,
-                scorer=cfg.scorer, token_max_df=cfg.token_max_df))
-        cmap, h4 = _stage("canonical_map", h3, [],
-                          lambda: canonical_map(links))
-        canon, h5 = _stage("canonical_triples", h4, ["max_broadcast_rows"],
-                           lambda: canonicalize_triples(
-                               groups, cmap,
-                               max_broadcast_rows=cfg.max_broadcast_rows))
-        # the canonical table's cnt column feeds the kernel as a
-        # multiplicity weight — no re-expansion of duplicate triples
-        stats, h6 = _stage(
-            "shape_stats", h5,
-            ["approx", "approx_max_cap", "approx_target_pct",
-             "approx_seed", "approx_bully"],
-            lambda: _stats_for(canon, cfg))
-        return {"triples": triples, "triple_groups": groups, "links": links,
-                "canonical_map": cmap, "canonical_triples": canon,
-                "shape_stats": stats}
-
+    # per-turn provenance handle: lazy by design (consuming it re-runs
+    # the Arrow extraction UDF) — stage 1 is fused precisely so no
+    # occurrence-sized table is ever checkpointed
+    tables = {"triples": extract_triples(transcripts, salt=cfg.salt),
+              "transcripts": transcripts}
     if workdir is None:
         # lazy mode: the returned DataFrames still depend on the operator
         # pins (truncated lineage), so releasing here would break them —
-        # pins stay GC-lifetime-managed as before
-        return _run()
-    # checkpointed mode: every returned stage handle is the parquet
-    # read-back from ckpt.stage, so every localCheckpoint pin created
-    # inside the stage thunks is fully consumed by the time _run returns.
-    # Release them deterministically instead of waiting on py4j GC —
-    # the no-orphaned-cache contract (tests/test_pipeline.py).
-    from .pins import pin_scope, release
-    with pin_scope() as owned:
-        out = _run()
-    release(spark, owned)
+        # pins stay GC-lifetime-managed
+        out = _walk(cfg, tables)
+    else:
+        c = asdict(cfg)
+        # content fingerprint, not just the path string: input REGENERATED
+        # at the same path must invalidate stale checkpoints (round-3
+        # review); the code fingerprint at the chain's root does the same
+        # for edited stage code
+        input_fp = ckpt.input_fingerprint(transcripts_path)
+        h = ckpt.code_fingerprint()
+
+        def run(name, fields, thunk):
+            nonlocal h
+            h = ckpt.config_hash([name, h, {k: c[k] for k in fields},
+                                  transcripts_path, input_fp])
+            return ckpt.stage(spark, os.path.join(workdir, name), name, h,
+                              thunk, counters)
+
+        # every returned stage handle is the parquet read-back from
+        # ckpt.stage, so every localCheckpoint pin created inside the
+        # stage builds is fully consumed once the walk returns. Release
+        # them deterministically instead of waiting on py4j GC — the
+        # no-orphaned-cache contract (tests/test_pipeline.py).
+        from .pins import pin_scope, release
+        with pin_scope() as owned:
+            out = _walk(cfg, tables, run)
+        release(spark, owned)
+    del out["transcripts"]
     return out

@@ -17,8 +17,7 @@ with mode("overwrite"), and batch ids come from the stream's checkpoint
 directory (idempotent), and a finished query never re-reads consumed
 files. Restarting with a DELETED stream checkpoint is NOT supported on
 a used workdir (batch boundaries may regroup and stale deltas would
-double-count) — start a fresh workdir instead, exactly like the batch
-pipeline's rule for changed stage code (checkpoint.py module docs).
+double-count) — start a fresh workdir instead.
 
 At 10^12 turns the deltas stay vocabulary-sized per batch (the Arrow
 channel already carries per-batch aggregates, extraction.py), so the

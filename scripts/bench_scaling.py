@@ -18,6 +18,12 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from qse_spark.pipeline import STAGES as PIPELINE_STAGES  # noqa: E402
+
+# bench.py keys its per-stage seconds by pipeline stage name
+STAGES = [name for name, *_ in PIPELINE_STAGES]
 
 
 def run(n_exec: int, n_turns: int, sf_dir: str, replicate: int,
@@ -60,10 +66,6 @@ def run(n_exec: int, n_turns: int, sf_dir: str, replicate: int,
     return best
 
 
-STAGES = ["p1_extract_group", "p2_linking", "p3_cc", "p4_canonicalize",
-          "p5_stats"]
-
-
 def scale_pair(n_turns: int, sf_dir: str, replicate: int,
                vocab: int = 1, repeats: int = 3) -> dict:
     """One N-vs-4N measurement pair -> report dict with per-stage split.
@@ -104,11 +106,9 @@ def _pair_table(report: dict) -> list[str]:
     ]
     for side in ("local_low", "local_high"):
         r = report[side]
-        s = r["stages"]
         md.append(f"| local-cluster[{r['cpus']}x1] | {r['e2e_sec']} | "
-                  f"{r['turns_per_sec']} | {s['p1_extract_group']} | "
-                  f"{s['p2_linking']} | {s['p3_cc']} | {s['p4_canonicalize']} "
-                  f"| {s['p5_stats']} |")
+                  f"{r['turns_per_sec']} | "
+                  + " | ".join(str(r["stages"][s]) for s in STAGES) + " |")
     se = report["stage_efficiency"]
     md.append("| per-stage efficiency (t_lo/t_hi/4) | — | — | "
               + " | ".join(str(se[s]) for s in STAGES) + " |")
@@ -198,8 +198,9 @@ def render_report(fixed: dict, scaled: dict | None, total: int,
             "",
             "The pipeline pairs above never reach the distributed",
             "large-star/small-star path (their link graphs sit under the",
-            "500K-edge driver-union-find threshold), so p3_cc's flat ratio",
-            "there measures the deliberate hybrid. This pair times the",
+            "500K-edge driver-union-find threshold), so canonical_map's",
+            "flat ratio there measures the deliberate hybrid. This pair",
+            "times the",
             f"distributed path itself on {g['edges']:,} chain-graph edges",
             f"({g['components']:,} chains of length {g['chain_len']},",
             "multi-round by construction, driver_threshold=0, output",

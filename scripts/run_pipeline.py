@@ -1,6 +1,6 @@
 """spark-submit entry point for the full KG-construction pipeline.
 
-Runs transcripts -> triples -> links -> canonical map -> canonical triples
+Runs transcripts -> triple groups -> links -> canonical map -> canonical triples
 -> QSE shape stats with per-stage checkpoints in --workdir (resumable: a
 rerun with the same config skips completed stages via their manifests).
 
@@ -34,10 +34,6 @@ def main():
                     help="rare-token recall backstop: only tokens in <= "
                          "this many cores form candidate blocks")
     ap.add_argument("--salt", type=int, default=0)
-    ap.add_argument("--materialize-turn-triples", action="store_true",
-                    help="checkpoint the occurrence-sized per-turn triple "
-                         "table as its own stage (provenance) instead of "
-                         "the default fused vocabulary-sized first stage")
     ap.add_argument("--scorer", choices=["jaccard", "tfidf"],
                     default="jaccard")
     ap.add_argument("--approx", action="store_true",
@@ -87,7 +83,6 @@ def main():
     cfg = PipelineConfig(
         tau=args.tau, salt=args.salt, scorer=args.scorer,
         token_max_df=args.token_max_df,
-        fuse_extract=not args.materialize_turn_triples,
         approx=args.approx, approx_max_cap=args.approx_max_cap,
         approx_target_pct=args.approx_target_pct)
     counters: list = []

@@ -177,29 +177,51 @@ def test_approx_toggle_resumes_upstream_stages(spark, fixture_dir, tmp_path):
                        "canonical_triples": True, "shape_stats": False}
 
 
-def test_fused_extract_equals_unfused(spark, fixture_dir, pipe, tmp_path):
-    """fuse_extract=True (default: the first checkpoint is the
-    vocabulary-sized fused aggregate, no per-turn triple stage on disk)
-    must produce the identical final tables as the unfused two-stage path,
-    and the per-turn provenance handle must still carry per-turn rows."""
-    _, wd_fused, _ = pipe
-    # the fused workdir never materializes the occurrence-sized stage
-    assert "triple_groups" in os.listdir(wd_fused)
-    assert "triples" not in os.listdir(wd_fused)
+def test_first_checkpoint_is_fused_triple_groups(spark, fixture_dir, pipe):
+    """The first checkpoint is the vocabulary-sized fused aggregate — no
+    per-turn triple stage on disk — while the returned per-turn
+    provenance handle still carries per-turn rows."""
+    _, wd, _ = pipe
+    assert "triple_groups" in os.listdir(wd)
+    assert "triples" not in os.listdir(wd)
     # fresh handles via resume: earlier tests in this module overwrite
-    # stage dirs in wd_fused, which invalidates the fixture's DataFrames
+    # stage dirs in wd, which invalidates the fixture's DataFrames
     # (their file indexes pin the old part files)
-    out_fused = run_pipeline(spark, f"{fixture_dir}/transcripts.parquet",
-                             workdir=wd_fused)
-    out_unfused = run_pipeline(
-        spark, f"{fixture_dir}/transcripts.parquet",
-        workdir=str(tmp_path / "wd"),
-        config=PipelineConfig(fuse_extract=False))
-    for key in ("triple_groups", "canonical_triples", "shape_stats"):
-        assert sorted(map(tuple, out_fused[key].collect())) == \
-            sorted(map(tuple, out_unfused[key].collect())), key
-    # lazy provenance handle: per-turn schema, same distinct-triple set
-    assert {"conv_id", "turn_idx"} <= set(out_fused["triples"].columns)
+    out = run_pipeline(spark, f"{fixture_dir}/transcripts.parquet",
+                       workdir=wd)
+    assert {"conv_id", "turn_idx"} <= set(out["triples"].columns)
+
+
+def test_code_change_invalidates(spark, fixture_dir, pipe, monkeypatch):
+    """The qse_spark source fingerprint roots the stage hash chain: a run
+    after a code edit on a completed workdir resumes no stage."""
+    from qse_spark import checkpoint as ckpt
+
+    _, wd, _ = pipe
+    monkeypatch.setattr(ckpt, "code_fingerprint", lambda: "edited")
+    counters = []
+    run_pipeline(spark, f"{fixture_dir}/transcripts.parquet", workdir=wd,
+                 counters=counters)
+    assert len(counters) == 5 and not any(c["resumed"] for c in counters)
+
+
+def test_code_fingerprint_tracks_source_bytes(tmp_path, monkeypatch):
+    """code_fingerprint changes with any .py byte of the package and with
+    nothing else; the pipeline pays for it once per process."""
+    from qse_spark import checkpoint as ckpt
+
+    assert ckpt.code_fingerprint() == ckpt.code_fingerprint()
+    assert ckpt.code_fingerprint.cache_info().misses == 1
+    (tmp_path / "sub").mkdir()
+    src = tmp_path / "sub" / "stage.py"
+    src.write_text("x = 1\n")
+    monkeypatch.setattr(ckpt, "__file__", str(tmp_path / "checkpoint.py"))
+    uncached = ckpt.code_fingerprint.__wrapped__
+    before = uncached()
+    (tmp_path / "notes.txt").write_text("not code")
+    assert uncached() == before
+    src.write_text("x = 2\n")
+    assert uncached() != before
 
 
 def test_vocab_scaled_world_links_exactly(spark, tmp_path):
@@ -278,3 +300,52 @@ def test_fingerprint_ignores_hidden_and_temp_dirs(tmp_path):
     (d / ".hidden_dir" / "junk.parquet").write_bytes(b"x")
     assert input_fingerprint(str(d)) == clean
     assert clean["files"] == 2
+
+
+def test_stage_wall_time_covers_compute(spark, tmp_path):
+    """A stage builder's eager work before it returns its DataFrame (pins,
+    guard counts) is part of the stage: the manifest's wall_sec covers
+    the thunk, not only the write."""
+    import time
+
+    from qse_spark import checkpoint as ckpt
+
+    def build():
+        time.sleep(0.5)
+        return spark.range(10)
+
+    counters = []
+    ckpt.stage(spark, str(tmp_path / "st"), "st", "h", build, counters)
+    assert counters[0]["wall_sec"] >= 0.5
+
+
+def test_part_counts_absent_path_falls_back_to_count(tmp_path):
+    """A scheme-less path whose walk finds no parquet file (written to a
+    non-local default FS) must not read as rows=0: no footer counts means
+    write_stage takes its count branch."""
+    from qse_spark.checkpoint import _parquet_part_counts
+
+    assert _parquet_part_counts(str(tmp_path / "absent")) is None
+
+
+def test_release_survives_jvm_api_drift():
+    """pins.release / release_df degrade to the GC fallback when the
+    Spark-internal persistent-RDD API raises, like _rdd_id does."""
+    from types import SimpleNamespace
+
+    from qse_spark import pins
+
+    def boom():
+        raise RuntimeError("getPersistentRDDs is gone")
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(
+        _jsc=SimpleNamespace(getPersistentRDDs=boom)))
+    ids = [1, 2]
+    assert pins.release(spark, ids) == 0 and ids == []
+
+    rdd = SimpleNamespace(id=lambda: 7)
+    plan = SimpleNamespace(analyzed=lambda: SimpleNamespace(rdd=lambda: rdd))
+    df = SimpleNamespace(
+        _jdf=SimpleNamespace(queryExecution=lambda: plan),
+        sparkSession=spark)
+    pins.release_df(df)
