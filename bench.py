@@ -11,12 +11,9 @@ seconds are the stage manifests' wall_sec, keyed by stage name
 (pipeline.STAGES).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), QSE_BENCH_TURNS (override fixture size),
-     QSE_BENCH_REPLICATE (default 1) — replicate the fixture R x with
-     distinct conv_ids into a multi-file parquet dir, so scaling runs are
-     compute-bound rather than startup-bound (vocabulary stays fixed, the
-     corpus grows — the realistic shape at 10^12 turns),
-     QSE_BENCH_APPROX (PipelineConfig(approx=True): QSE-Approximate stats).
+     SPARK_GRAFT_CPUS (default 32).
+Scaling runs (1 vs 4 executors on replicated or vocabulary-scaled worlds)
+are `scripts/scale.py pipeline`.
 """
 
 from __future__ import annotations
@@ -36,37 +33,28 @@ from qse_spark.operators import dedup, similarity  # noqa: E402
 from qse_spark.operators import text as text_ops  # noqa: E402
 from qse_spark.oracles import TPCH_TRIPLES_SQL  # noqa: E402
 from qse_spark.pipeline import PipelineConfig, run_pipeline  # noqa: E402
-from qse_spark.session import get_spark  # noqa: E402
+from qse_spark.session import get_spark, warm_up  # noqa: E402
 from qse_spark.stats import shape_stats  # noqa: E402
-from qse_spark.testdata import ensure_fixture  # noqa: E402
+from qse_spark.testdata import ensure_fixture, replicated_input  # noqa: E402
 
 SF_TURNS = {"sf0.001": 2000, "sf0.01": 20000, "sf0.1": 200000}
+PIPE_RUNS = 3
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    n_turns = int(os.environ.get("QSE_BENCH_TURNS",
-                                 SF_TURNS.get(sf_tag, 200000)))
-    replicate = int(os.environ.get("QSE_BENCH_REPLICATE", "1"))
-    # QSE_BENCH_VOCAB > 1 scales the mention vocabulary with the corpus
-    # (shared-pool entity world) so the back-half stages — linking, CC,
-    # canonicalize, stats — are measured on corpus-proportional work, not
-    # the fixed tiny aggregate replication alone produces (VERDICT r3
-    # missing #1)
-    vocab_mult = int(os.environ.get("QSE_BENCH_VOCAB", "1"))
-    fx = ensure_fixture(seed=42, n_turns=n_turns, vocab_mult=vocab_mult)
+    n_turns = SF_TURNS.get(sf_tag, 200000)
+    fx = ensure_fixture(seed=42, n_turns=n_turns)
 
-    master = os.environ.get("QSE_BENCH_MASTER", f"local[{cpus}]")
-    spark = get_spark(master=master, app_name="qse-bench")
+    spark = get_spark(master=f"local[{cpus}]", app_name="qse-bench")
     spark.sparkContext.setLogLevel("ERROR")
     q: dict[str, float] = {}
-    approx_mode = bool(os.environ.get("QSE_BENCH_APPROX"))
     # salt=0: the bench input is already written as 64 balanced files, so
     # the scan parallelizes without a pre-shuffle; conversation salting is
     # exercised by tests and stays available for skewed production inputs
-    cfg = PipelineConfig(salt=0, approx=approx_mode)
+    cfg = PipelineConfig(salt=0)
 
     # tmpfs-backed bench input and checkpoints: the sandbox's virtual disk
     # has erratic co-tenant-driven latency that would otherwise dominate
@@ -75,50 +63,9 @@ def main():
         else os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           ".bench_work")
     os.makedirs(root, exist_ok=True)
-    in_path = os.path.join(fx, "transcripts.parquet")
-    if replicate >= 1:
-        # replicate == 1 still rewrites the input as a 64-file dir: the
-        # generator emits ONE parquet file and a single-file scan caps the
-        # extraction stage at one task per row group
-        # fixture GENERATOR version is part of the cache key: the derived
-        # replicated dir must invalidate when the world's content changes
-        # (e.g. the round-4 uniform-mixture vocab worlds bumped v4 -> v5),
-        # not just when (n_turns, replicate, vocab) change — for the
-        # fixed-vocab world too, since generator edits can change it as well
-        with open(os.path.join(fx, "meta.json")) as _f:
-            _gen_ver = json.load(_f).get("version", 0)
-        big = os.path.join(root, f"turns{n_turns}x{replicate}"
-                           f"v{vocab_mult}g{_gen_ver}")
-        if not os.path.exists(os.path.join(big, "_SUCCESS")):
-            base = spark.read.parquet(in_path)
-            (base.withColumn("_r", F.explode(F.sequence(F.lit(1),
-                                                        F.lit(replicate))))
-             .withColumn("conv_id", F.concat("conv_id", F.lit("_r"),
-                                             F.col("_r")))
-             .drop("_r")
-             .repartition(64)
-             .write.mode("overwrite").parquet(big))
-        in_path = big
-        n_turns *= replicate
-        # one FILE per scan task: packing several python-heavy files into a
-        # 128 MB partition creates coarse waves whose stragglers idle
-        # executors at the stage tail (measured 13% on 4 executors);
-        # per-file tasks keep every worker busy to the end
-        import glob as _glob
-        fsz = max((os.path.getsize(p) for p in
-                   _glob.glob(os.path.join(big, "part-*"))), default=0)
-        if fsz:
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           str(fsz + 1024 * 1024))
-
-    # warm-up: one task per slot spins up EVERY python worker (limit(...)
-    # would warm a single worker and leave the rest to start inside the
-    # timed section), plus one tiny shuffle to open the netty channels.
-    # Steady-state throughput; cluster warm-up is a one-time cost.
-    slots = spark.sparkContext.defaultParallelism
-    (spark.range(slots * 4, numPartitions=slots * 4)
-     .mapInPandas(lambda it: it, "id long")
-     .groupBy((F.col("id") % 8).alias("k")).count().count())
+    in_path = replicated_input(spark, fx, 1, root)
+    # steady-state throughput; cluster warm-up is a one-time cost
+    warm_up(spark)
 
     # --- headline: run_pipeline end to end, stage-by-stage timing ---
     def pipeline_pass():
@@ -142,41 +89,12 @@ def main():
     # single timed pass that catches a freeze misreports every stage.
     # Per-stage splits come from the winning pass; they sum to its e2e
     # less the stage read-backs and the final stats collect.
-    # The controlled 64M-turn scaling harness (scripts/bench_scaling.py)
-    # sets QSE_BENCH_PIPE_RUNS=1: its passes are 100-650s, far above the
-    # stall scale, and a second pass would double a ~20-min experiment.
-    pipe_runs = int(os.environ.get("QSE_BENCH_PIPE_RUNS", "3"))
-    e2e, stage_q, counts = pipeline_pass()
-    for _ in range(pipe_runs - 1):
-        e2e2, s2, c2 = pipeline_pass()
-        if e2e2 < e2e:
-            e2e, stage_q, counts = e2e2, s2, c2
+    e2e, stage_q, counts = min((pipeline_pass() for _ in range(PIPE_RUNS)),
+                               key=lambda r: r[0])
     q.update(stage_q)
     n_triples, n_mentions, n_canon, n_stats = counts
 
     # --- operator queries on the driver tables ---
-    if os.environ.get("QSE_BENCH_PIPELINE_ONLY"):
-        out = {
-            "metric": "kg_pipeline_e2e", "value": round(e2e, 3),
-            "unit": "sec",
-            "queries": {k: round(v, 3) for k, v in q.items()},
-            "protocol": "floor",
-            "n_runs": {"pipeline": pipe_runs},
-            "sf": sf_tag, "cpus": cpus, "replicate": replicate,
-            "vocab_mult": vocab_mult, "approx": approx_mode,
-            "rows": {"turns": n_turns, "raw_triples": n_triples,
-                     "mentions": n_mentions, "canonical_triples": n_canon,
-                     "stats_rows": n_stats},
-            "throughput": {
-                "turns_per_sec": round(n_turns / e2e, 1),
-                "triples_per_sec": round(n_triples / e2e, 1),
-                "extract_triples_per_sec": round(n_triples / q["triple_groups"], 1),
-            },
-        }
-        spark.stop()
-        print(json.dumps(out))
-        return
-
     for tbl in ["customer", "orders", "nation", "region", "lineitem",
                 "documents", "embeddings", "events"]:
         p = os.path.join(sf_dir, f"{tbl}.parquet")
@@ -236,10 +154,9 @@ def main():
         # the pipeline row is the best complete pass of n_runs.pipeline,
         # each operator row the min of n_runs.operator_queries
         "protocol": "floor",
-        "n_runs": {"pipeline": pipe_runs, "operator_queries": 3},
+        "n_runs": {"pipeline": PIPE_RUNS, "operator_queries": 3},
         "sf": sf_tag,
         "cpus": cpus,
-        "replicate": replicate,
         "rows": {"turns": n_turns, "raw_triples": n_triples,
                  "mentions": n_mentions, "canonical_triples": n_canon,
                  "stats_rows": n_stats},

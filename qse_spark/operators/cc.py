@@ -35,9 +35,9 @@ def _large_star(edges: DataFrame) -> DataFrame:
     scaling killer the join form hid — no per-round AQE broadcast of the
     O(V) node->min map. That map grows with the graph, so broadcasting it
     serializes every round on the driver regardless of executor count
-    (measured on a 2.75M-edge chain graph, scripts/cc_probe.py: whole CC
-    108 s joined/broadcast vs 41 s windowed at 4x1 executors, 148 s vs
-    91 s at 1x1).
+    (measured on a 2.75M-edge chain graph, `scripts/scale.py cc`'s
+    generator: whole CC 108 s joined/broadcast vs 41 s windowed at 4x1
+    executors, 148 s vs 91 s at 1x1).
     """
     from pyspark.sql.window import Window
 

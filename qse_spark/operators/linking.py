@@ -118,11 +118,13 @@ def _block_keys(sh: DataFrame, bands: int, rows: int,
     the shuffled bytes ~40% and replace string sort/hash comparisons
     with longs. The verify joins resolve ids back to (core, sh, n)
     through the pinned dimension. A 64-bit collision (~1e-7 odds at 4M
-    cores) merges two cores' block memberships: the verify still scores
-    REAL core pairs exactly (each id row joins back to its true cores),
-    so no false link is possible; the only effect is that a colliding
-    pair itself is not self-compared — recall epsilon far below the LSH
-    band miss probability."""
+    cores) merges two cores' block memberships. The Jaccard verify still
+    scores REAL core pairs exactly (each id row joins back to its true
+    cores), so on that path no false link is possible; the only effect
+    is that a colliding pair itself is not self-compared — recall
+    epsilon far below the LSH band miss probability. The tfidf verify
+    keys its term weights by cid, so there a collision merges the two
+    cores' weight vectors and can score a pair on the wrong terms."""
     lsh_keys = _band_keys(sh, bands, rows)
     toks = _core_tokens(sh)
     # no broadcast hint: the rare-token dim is token-vocabulary-sized —
@@ -182,7 +184,7 @@ def _hashed_sh(core_col) -> F.Column:
     explode — ~2x fewer shuffle bytes and cheaper array_intersect: the
     single-executor minhash stage measured 11.1 s -> 4.8 s and the full
     kernel ~10-25% faster at both executor counts on the
-    scripts/linking_scaling.py worlds (absolute cost, not the
+    `scripts/scale.py linking` worlds (absolute cost, not the
     1-vs-4 efficiency ratio, which stays exchange-bound — see
     BENCH_SCALING.md's linking appendix). Jaccard over hashed shingles equals
     string-shingle Jaccard unless two distinct 3-grams collide in 64
@@ -222,10 +224,12 @@ def dropped_token_report(cores: DataFrame,
     return _token_df(_core_tokens(cores)).filter(F.col("df") > token_max_df)
 
 
-def _core_sh_dim(cores: DataFrame) -> DataFrame:
-    """THE cached (core, sh, n) shingle dimension, adaptively coalesced —
-    shared by link_mentions and linking_edges so the two paths cannot
-    drift (review finding: the standalone path missed the width fix).
+def _core_sh_dim(cores: DataFrame) -> tuple[DataFrame, int]:
+    """THE cached (core, sh, n) shingle dimension, adaptively coalesced,
+    and its row count — shared by link_mentions and linking_edges so the
+    two paths cannot drift (review finding: the standalone path missed
+    the width fix). The count is returned so the verify paths size their
+    broadcast guard from it instead of counting the dimension again.
 
     Eager localCheckpoint: the table feeds many plan branches and the
     blocks are GC-cleaned when the DataFrame goes out of scope. Adaptive
@@ -248,7 +252,7 @@ def _core_sh_dim(cores: DataFrame) -> DataFrame:
     n_cores = sh_dim.count()
     npart = max(1, min(cores.sparkSession.sparkContext.defaultParallelism,
                        n_cores // 8_000))
-    return sh_dim.coalesce(npart)
+    return sh_dim.coalesce(npart), n_cores
 
 
 # verify-join broadcast guard: the shingle dimension is vocabulary-sized
@@ -261,10 +265,11 @@ def _core_sh_dim(cores: DataFrame) -> DataFrame:
 VERIFY_BROADCAST_MAX_CORES = 500_000
 
 
-def _fuzzy_links(sh_dim: DataFrame, tau: float, bands: int, rows: int,
-                 max_block: int,
+def _fuzzy_links(sh_dim: DataFrame, n_cores: int, tau: float, bands: int,
+                 rows: int, max_block: int,
                  token_max_df: int = DEFAULT_TOKEN_MAX_DF) -> DataFrame:
-    """Verified fuzzy core pairs from a cached (core, sh, n) table.
+    """Verified fuzzy core pairs from a cached (core, sh, n) table of
+    `n_cores` rows.
 
     Round-5 note on the verify shape (round-4 standalone scaling 0.579):
     three rewrites were built and MEASURED against this plan before
@@ -282,9 +287,8 @@ def _fuzzy_links(sh_dim: DataFrame, tau: float, bands: int, rows: int,
     size-guarded broadcast of the vocabulary-sized dimension below."""
     cand = _candidate_pairs(sh_dim.select("core", "sh"), bands, rows,
                             max_block, token_max_df)
-    # one cheap count against the eagerly-checkpointed dimension
-    bcast = sh_dim.count() <= VERIFY_BROADCAST_MAX_CORES
-    hint = F.broadcast if bcast else (lambda d: d)
+    hint = (F.broadcast if n_cores <= VERIFY_BROADCAST_MAX_CORES
+            else (lambda d: d))
     a_sh = hint(sh_dim.select(F.col("cid").alias("a"),
                               F.col("core").alias("core_a"),
                               F.col("sh").alias("sh_a"),
@@ -305,8 +309,8 @@ def _fuzzy_links(sh_dim: DataFrame, tau: float, bands: int, rows: int,
                     "score"))
 
 
-def _tfidf_shingle_links(sh_dim: DataFrame, tau: float, bands: int,
-                         rows: int, max_block: int,
+def _tfidf_shingle_links(sh_dim: DataFrame, n_cores: int, tau: float,
+                         bands: int, rows: int, max_block: int,
                          token_max_df: int = DEFAULT_TOKEN_MAX_DF
                          ) -> DataFrame:
     """TF-IDF cosine verify over the same LSH candidates, with the 3-gram
@@ -315,7 +319,6 @@ def _tfidf_shingle_links(sh_dim: DataFrame, tau: float, bands: int,
     Jaccard counts at full weight — the scorer the north star names."""
     cand = _candidate_pairs(sh_dim.select("core", "sh"), bands, rows,
                             max_block, token_max_df)
-    n_cores = sh_dim.count()
     terms = sh_dim.select(F.col("cid").alias("id"),
                           F.explode("sh").alias("tok"))
     ww = _weights_from_terms(terms, n_cores, max_df=2 ** 31 - 1)
@@ -353,11 +356,10 @@ def link_mentions(mentions: DataFrame, tau: float = DEFAULT_TAU,
     'tfidf' (idf-weighted cosine over the same shingle terms)."""
     if scorer not in ("jaccard", "tfidf"):
         raise ValueError(f"unknown scorer {scorer!r}")
-    sh_dim = _core_sh_dim(mention_cores(mentions))
-    if scorer == "tfidf":
-        return _tfidf_shingle_links(sh_dim, tau, bands, rows, max_block,
-                                    token_max_df)
-    return _fuzzy_links(sh_dim, tau, bands, rows, max_block, token_max_df)
+    score_fn = (_tfidf_shingle_links if scorer == "tfidf"
+                else _fuzzy_links)
+    return score_fn(*_core_sh_dim(mention_cores(mentions)), tau, bands,
+                    rows, max_block, token_max_df)
 
 
 def linking_edges(mentions: DataFrame, tau: float = DEFAULT_TAU,
@@ -393,14 +395,14 @@ def linking_edges(mentions: DataFrame, tau: float = DEFAULT_TAU,
     # table — vocabulary-sized when the caller passes deduped mentions
     # (as mentions_from_triples does), occurrence-sized otherwise.
     cores = pin(mention_cores(mentions))
-    sh_dim = _core_sh_dim(cores)
+    sh_dim, n_cores = _core_sh_dim(cores)
     core_node = F.concat(F.lit("\x7f"), F.col("core"))
     proj = cores.select(F.col("mention_id").alias("src"),
                         core_node.alias("dst"),
                         F.lit(1.0).alias("score"))
     score_fn = (_tfidf_shingle_links if scorer == "tfidf"
                 else _fuzzy_links)
-    fuzzy = score_fn(sh_dim, tau, bands, rows, max_block,
+    fuzzy = score_fn(sh_dim, n_cores, tau, bands, rows, max_block,
                      token_max_df=token_max_df).select(
         F.concat(F.lit("\x7f"), F.col("src")).alias("src"),
         F.concat(F.lit("\x7f"), F.col("dst")).alias("dst"),

@@ -9,6 +9,7 @@ splitting), Arrow on (vectorized pandas UDF transfer), UTC session timezone
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -40,15 +41,14 @@ def get_spark(master: str | None = None, app_name: str = "qse-spark",
     if shuffle_partitions is None:
         shuffle_partitions = inferred
 
-    # shuffle/spill on tmpfs when available: on this single-node sandbox the
-    # NVMe is shared with co-tenants and becomes the scaling bottleneck; a
-    # real cluster would use per-executor local SSDs instead
-    local_dir = os.environ.get("QSE_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/qse-spark-local"
+    # shuffle/spill under the temp dir, not tmpfs: tmpfs pages are RAM the
+    # driver heap and executors compete for. SPARK_LOCAL_DIRS still
+    # overrides this inside Spark.
+    local_dir = os.environ.get("QSE_LOCAL_DIR") or os.path.join(
+        tempfile.gettempdir(), "qse-spark-local")
     builder = (
         SparkSession.builder.master(master).appName(app_name)
-        .config("spark.local.dir", local_dir or "/tmp")
+        .config("spark.local.dir", local_dir)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -99,9 +99,26 @@ def driver_memory() -> str:
     env = os.environ.get("QSE_SPARK_DRIVER_MEM")
     if env:
         return env
-    phys_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-               // (1024 * 1024))
-    return f"{min(48 * 1024, phys_mb * 3 // 8)}m"
+    return f"{min(48 * 1024, physical_mb() * 3 // 8)}m"
+
+
+def physical_mb() -> int:
+    """The host's physical RAM in MiB."""
+    return (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            // (1024 * 1024))
+
+
+def warm_up(spark: SparkSession) -> None:
+    """Start every Python worker and open the shuffle channels before a
+    timed section: one task per slot (a `limit(...)` would warm a single
+    worker and leave the rest to start inside the clock), plus one tiny
+    shuffle."""
+    from pyspark.sql import functions as F
+
+    slots = spark.sparkContext.defaultParallelism
+    (spark.range(slots * 4, numPartitions=slots * 4)
+     .mapInPandas(lambda it: it, "id long")
+     .groupBy((F.col("id") % 8).alias("k")).count().count())
 
 
 def _package_zip() -> str:

@@ -9,6 +9,7 @@ else changes."""
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,13 +64,24 @@ def merge_into_groups(spark: SparkSession, table: str,
     tests/test_iceberg.py when the runtime is present). `table` must be
     an Iceberg identifier (catalog.db.name); Iceberg gives the statement
     snapshot isolation + atomic commit, which is why no staging/rename
-    dance is needed on that path."""
-    delta.createOrReplaceTempView("_qse_merge_delta")
+    dance is needed on that path.
+
+    The delta's view name is unique per call, so concurrent merges in one
+    session cannot read each other's delta, and the insert names its
+    columns, so it does not depend on the delta's column order matching
+    the table's."""
+    view = f"_qse_merge_delta_{uuid.uuid4().hex}"
+    delta.createOrReplaceTempView(view)
     on = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    spark.sql(f"""
-        MERGE INTO {table} t USING _qse_merge_delta s ON {on}
-        WHEN MATCHED THEN UPDATE SET t.cnt = t.cnt + s.cnt
-        WHEN NOT MATCHED THEN INSERT *""")
+    cols = ", ".join(delta.columns)
+    vals = ", ".join(f"s.{c}" for c in delta.columns)
+    try:
+        spark.sql(f"""
+            MERGE INTO {table} t USING {view} s ON {on}
+            WHEN MATCHED THEN UPDATE SET t.cnt = t.cnt + s.cnt
+            WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})""")
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def read_table(spark: SparkSession, path_or_table: str) -> DataFrame:

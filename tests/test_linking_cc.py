@@ -272,3 +272,36 @@ def test_canonical_map_exact_on_hot_token_world(spark):
     # not the quadratic hot-block failure this test guards against)
     hot_classes = {cmap[x] for x in hot}
     assert len(hot_classes) >= len(hot) - 10
+
+
+@pytest.mark.parametrize("scorer", ["jaccard", "tfidf"])
+def test_verify_guard_sort_merge_branch_equals_broadcast(
+        spark, mentions, monkeypatch, scorer):
+    """Both branches of the verify broadcast guard
+    (VERIFY_BROADCAST_MAX_CORES) give row-identical linking_edges. With
+    auto-broadcast off, the hinted branch still broadcasts and the
+    branch above the guard plans no broadcast join at all. The tfidf
+    score is a float sum whose order follows the join strategy, so it
+    may differ in the last bit; it is compared at 1e-12."""
+    from qse_spark.operators import linking
+    from qse_spark.plans import plan_summary
+
+    def rows(df):
+        return sorted((r["src"], r["dst"], round(r["score"], 12))
+                      for r in df.collect())
+
+    want = rows(linking_edges(mentions, scorer=scorer))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        hinted = plan_summary(linking_edges(mentions, scorer=scorer))
+        assert hinted["broadcast_joins"] >= 2, hinted
+        monkeypatch.setattr(linking, "VERIFY_BROADCAST_MAX_CORES", 0)
+        shuffled = linking_edges(mentions, scorer=scorer)
+        s = plan_summary(shuffled)
+        assert s["broadcast_joins"] == 0, s
+        assert s["sortmerge_joins"] + s["shuffledhash_joins"] >= 2, s
+        assert rows(shuffled) == want
+    finally:
+        spark.conf.set(key, prev)

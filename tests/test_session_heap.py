@@ -1,5 +1,7 @@
-"""Driver-heap default of `get_spark`: min(48g, 3/8 of physical RAM), with
-`QSE_SPARK_DRIVER_MEM` as the override. No Spark session is started."""
+"""Host-sized defaults of `get_spark`: the driver heap is min(48g, 3/8 of
+physical RAM), with `QSE_SPARK_DRIVER_MEM` as the override, and shuffle/spill
+go under the temp dir, with `QSE_LOCAL_DIR` as the override. No Spark session
+is started."""
 
 from __future__ import annotations
 
@@ -34,7 +36,7 @@ def test_env_override_wins(monkeypatch):
     assert session.driver_memory() == "4g"
 
 
-def test_get_spark_passes_default_heap(monkeypatch):
+def _capture_conf(monkeypatch):
     conf = {}
 
     class _Builder:
@@ -55,7 +57,27 @@ def test_get_spark_passes_default_heap(monkeypatch):
         builder = _Builder()
 
     monkeypatch.setattr(session, "SparkSession", _Session)
+    return conf
+
+
+def test_get_spark_passes_default_heap(monkeypatch):
+    conf = _capture_conf(monkeypatch)
     monkeypatch.delenv("QSE_SPARK_DRIVER_MEM", raising=False)
     _fake_ram(monkeypatch, 128 * GIB)
     session.get_spark(master="local[2]")
     assert conf["spark.driver.memory"] == "49152m"
+
+
+def test_default_local_dir_is_under_tempdir_not_tmpfs(monkeypatch, tmp_path):
+    conf = _capture_conf(monkeypatch)
+    monkeypatch.delenv("QSE_LOCAL_DIR", raising=False)
+    monkeypatch.setattr(session.tempfile, "tempdir", str(tmp_path))
+    session.get_spark(master="local[2]")
+    assert conf["spark.local.dir"] == str(tmp_path / "qse-spark-local")
+
+
+def test_local_dir_env_override_wins(monkeypatch, tmp_path):
+    conf = _capture_conf(monkeypatch)
+    monkeypatch.setenv("QSE_LOCAL_DIR", str(tmp_path / "mine"))
+    session.get_spark(master="local[2]")
+    assert conf["spark.local.dir"] == str(tmp_path / "mine")

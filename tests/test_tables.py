@@ -45,3 +45,46 @@ def test_iceberg_probe_is_honest(spark):
     """This image ships no Iceberg jars: the probe must say so (the
     fallback path above is then the one actually under test)."""
     assert iceberg_available(spark) is False
+
+
+class _FakeDelta:
+    columns = ["subject", "predicate", "object", "obj_kind", "cnt"]
+
+    def __init__(self):
+        self.views = []
+
+    def createOrReplaceTempView(self, name):
+        self.views.append(name)
+
+
+class _FakeSpark:
+    """Records the SQL `merge_into_groups` sends; the Iceberg jar the real
+    statement needs is not required."""
+
+    def __init__(self):
+        self.sql_text, self.dropped = [], []
+        self.catalog = self
+
+    def sql(self, q):
+        self.sql_text.append(q)
+
+    def dropTempView(self, name):
+        self.dropped.append(name)
+
+
+def test_merge_into_groups_sql_names_view_and_insert_columns():
+    from qse_spark.sources.tables import merge_into_groups
+
+    spark, keys = _FakeSpark(), ["subject", "predicate", "object", "obj_kind"]
+    d1, d2 = _FakeDelta(), _FakeDelta()
+    merge_into_groups(spark, "qse.db.groups", d1, keys)
+    merge_into_groups(spark, "qse.db.groups", d2, keys)
+    (v1,), (v2,) = d1.views, d2.views
+    assert v1 != v2, "two merges must not share a temp view"
+    assert spark.dropped == [v1, v2]
+    q = " ".join(spark.sql_text[0].split())
+    assert f"USING {v1} s ON t.subject <=> s.subject AND" in q
+    assert "INSERT *" not in q
+    assert ("WHEN NOT MATCHED THEN INSERT (subject, predicate, object, "
+            "obj_kind, cnt) VALUES (s.subject, s.predicate, s.object, "
+            "s.obj_kind, s.cnt)") in q
